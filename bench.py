@@ -162,7 +162,19 @@ HEADLINE = [
 ]
 
 
+def reclaim_between_keys() -> bool:
+    """SPARK_BENCH_RECLAIM: "1" (the default) reclaims blocks and frame
+    caches between HEADLINE keys, "0" keeps one warm session for the
+    whole suite. Any other value exits non-zero naming the variable, so
+    a stale or mistyped setting cannot silently pick a mode."""
+    value = os.environ.get("SPARK_BENCH_RECLAIM", "1")
+    if value not in ("0", "1"):
+        sys.exit(f"bench.py: SPARK_BENCH_RECLAIM must be '0' or '1', got {value!r}")
+    return value == "1"
+
+
 def main() -> None:
+    reclaim = reclaim_between_keys()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)/?$", sf_dir)
     sf = float(m.group(1)) if m else None
@@ -221,7 +233,7 @@ def main() -> None:
         # ~2000-char tail capture and made it unparseable) is why the
         # detail is per-line rather than one big dict.
         print(json.dumps({"query": key, "sec": round(best, 4)}))
-        if os.environ.get("SPARK_BENCH_RECLAIM", "1") != "0":
+        if reclaim:
             # Deterministic block + frame-cache reclaim between HEADLINE
             # keys — ON by default as of r17 (VERDICT r16 #4: the
             # session frame caches let graph_*/simhash_* keys reuse

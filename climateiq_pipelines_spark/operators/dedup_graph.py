@@ -5,7 +5,7 @@ round 3; loaded after the driver's 50-entry correctness window
 (plans.load_all) and covered by tools/driver_sim.py.
 
 This is the repo's genuinely ITERATIVE operator (a driver loop of
-DataFrame joins, converging on graph diameter), yet still fully
+window passes, converging in O(log n) rounds), yet still fully
 hash-checked: the DuckDB oracle computes the same components with a
 recursive CTE, so the iterative Spark formulation is proven equivalent
 to the declarative fixpoint on every fixture.
@@ -44,12 +44,11 @@ def connected_components_propagation(
     O(log n) rounds) is the registered production path; this form is
     kept as the independently-simple reference both are property-tested
     against (tests/test_properties.py) and as the better plan for
-    graphs KNOWN to be clique-shaped (1-2 rounds, fewer shuffles per
-    round). Convergence check: labels only ever DECREASE under
-    min-propagation, so Σlabel is a strict potential function — the
-    round sum (a one-row aggregate off the checkpointed frame, summed
-    as decimal(38) so 10^9 nodes with 10^18 ids cannot overflow) is
-    unchanged iff no label moved."""
+    graphs KNOWN to be clique-shaped (1-2 rounds). Convergence check:
+    labels only ever DECREASE under min-propagation, so Σlabel is a
+    strict potential function — the round sum (a one-row aggregate off
+    the checkpointed frame, summed as decimal(38) so 10^9 nodes with
+    10^18 ids cannot overflow) is unchanged iff no label moved."""
     bi = edges.select(
         F.col("a_id").alias("src"), F.col("b_id").alias("dst")
     ).union(edges.select(F.col("b_id").alias("src"), F.col("a_id").alias("dst")))
@@ -81,113 +80,103 @@ def connected_components_propagation(
     return labels
 
 
+def _neighbourhoods(e: DataFrame) -> DataFrame:
+    """(x, y, mn, mx): every edge (x, y) of ``e`` in both orientations,
+    with the min and max of x's neighbours — one window, one exchange,
+    and ``e`` read once. Repeated edges do not change mn or mx."""
+    x, y = F.col("x"), F.col("y")
+    by_node = W.partitionBy("x")
+    both = F.array(
+        F.struct(x.alias("x"), y.alias("y")),
+        F.struct(y.alias("x"), x.alias("y")),
+    )
+    return e.select(F.explode(both).alias("p")).select("p.x", "p.y").select(
+        "x",
+        "y",
+        F.min(y).over(by_node).alias("mn"),
+        F.max(y).over(by_node).alias("mx"),
+    )
+
+
+def _is_star_forest(star: DataFrame) -> bool:
+    """True iff the self-loop-free ``_neighbourhoods`` frame is a star
+    forest (see ``connected_components``); one ``limit(1).count()``."""
+    x, mn, mx = F.col("x"), F.col("mn"), F.col("mx")
+    return star.where((mn < x) & (mn != mx)).limit(1).count() == 0
+
+
 def connected_components(
     nodes: DataFrame, edges: DataFrame, node_col: str = "doc_id"
 ) -> DataFrame:
     """Connected components by ALTERNATING LARGE-STAR / SMALL-STAR
     contraction (Kiveris et al., "Connected Components in MapReduce and
-    Beyond"): returns (node_col, label) where label = min node id
-    reachable over the undirected edge set (a_id, b_id). Same contract
-    as ``connected_components_propagation`` (totality: every node
-    appears; singletons label themselves) and property-tested equal to
-    it and to a union-find reference (tests/test_properties.py); the
-    registered key llm_dedup_clusters hash-checks it against a
-    recursive-CTE oracle.
+    Beyond"): same contract as ``connected_components_propagation``
+    (self-loops, repeated edges and either orientation accepted) and
+    property-tested equal to it and to union-find. Each round contracts
+    toward component-minimum stars, so the round count is O(log n) for
+    any component shape, where propagation needs diameter rounds.
 
-    Why this is the registered 100 TB path (VERDICT r5 #3): each round
-    CONTRACTS the graph toward component-minimum stars, converging in
-    O(log n) rounds REGARDLESS of component shape, where propagation
-    needs diameter rounds — a chain component makes diameter O(n). The
-    per-round cost is higher (two groupBy+join+distinct passes vs one
-    join+agg) but bounded by the shrinking edge set, and the round
-    count is what kills wall-clock at scale.
+    One round is two exchanges and no join:
+    - large-star: the edges in both orientations, partitioned by node x
+      (exchange 1); a window gives each row mn/mx = min/max of Γ(x),
+      and each neighbour y > x is linked to min(Γ(x) ∪ {x}).
+    - small-star: those (y, m) edges, repartitioned by y (exchange 2)
+      and deduplicated inside that partitioning; a window min over y's
+      smaller neighbours gives m', and each of them and y itself is
+      linked to m'.
 
-    Round structure (edges kept oriented big→small, deduped):
-    - large-star: every node links its strictly-LARGER neighbors to the
-      min of its closed neighborhood — long tails hook onto small ids.
-    - small-star: every node links its smaller neighbors (and itself)
-      to the min of its closed neighborhood — stars flatten.
-    Fixpoint = the edge set is exactly the set of (node, component-min)
-    stars. Convergence detection: a cheap (count, Σu, Σv) triple per
-    round (one bounded driver row, decimal(38) sums so 10^9 nodes
-    cannot overflow), CONFIRMED by an exact set-difference check before
-    breaking (the triple alone is necessary, not sufficient); lineage
-    is truncated per round with localCheckpoint (cluster deployments:
-    durable checkpoint)."""
-    # Orient big→small, dedup, drop self-loops.  Checkpoints here and
-    # per round are LAZY: each round's convergence-stat .first() is the
-    # action that materializes the round's edge set, so one job per
-    # round does both, where eager=True paid a separate blocking
-    # materialization job before every stats read (measured r9 at
-    # sf0.1: 4.04 s → 3.55 s warm, 7.31 s → 4.49 s cold for the full
-    # loop; answers identical).
-    raw = edges.select(F.col("a_id").alias("u"), F.col("b_id").alias("v"))
-    e = (
-        raw.where(F.col("u") != F.col("v"))
-        .select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    prev_stat = None
-    prev_e = None
+    Stop test, before each round: every node has all neighbours larger
+    (mn > x) or exactly one (mn == mx). That holds iff the edges are
+    disjoint stars centred on their component minima: an edge's larger
+    end has a smaller neighbour, so it is a one-neighbour leaf; its
+    smaller end has a larger neighbour, so it cannot also have a
+    smaller one and is a centre. At that fixpoint the label is
+    least(x, mn), read from the same windowed frame.
+
+    That frame is the round's lineage cut (lazy localCheckpoint;
+    cluster deployments: durable checkpoint). Under AQE the checkpoint
+    call already plans the adaptive query, which runs each shuffle-map
+    stage below it as its own job; the stop test's limit adds one more
+    exchange and the final job. Four jobs per round is why the round
+    is kept to two exchanges."""
+    x, y = F.col("x"), F.col("y")
+    by_node = W.partitionBy("x")
+    e = edges.select(F.col("a_id").alias("x"), F.col("b_id").alias("y"))
+    e = e.where(x != y)
     for _ in range(32):
-        # LARGE-STAR: for each node x, link every strictly-larger
-        # neighbor to min(Γ(x) ∪ {x}).  Emitted edges (v, m) satisfy
-        # v > x ≥ m, so the big→small orientation is preserved.
-        nbrs = e.select("u", "v").union(
-            e.select(F.col("v").alias("u"), F.col("u").alias("v"))
+        star = _neighbourhoods(e).localCheckpoint(eager=False)
+        if _is_star_forest(star):
+            break
+        # LARGE-STAR: (y, min(Γ(x) ∪ {x})) for every neighbour y > x.
+        large = (
+            star.where(y > x)
+            .select(y.alias("x"), F.least(x, "mn").alias("y"))
+            .repartition("x")
+            .dropDuplicates(["x", "y"])
         )
-        mins = (
-            nbrs.groupBy("u")
-            .agg(F.min("v").alias("mn"))
-            .select("u", F.least("mn", F.col("u")).alias("m"))
-        )
-        # No .distinct() between the stars (round-10 A/B): the
-        # downstream min-aggregate is duplicate-insensitive and its
-        # partial (map-side) aggregation collapses duplicates without
-        # a dedicated shuffle, while the round's FINAL distinct still
-        # canonicalizes the state — measured 4.18-4.34 s -> 4.04 s
-        # warm at sf0.1 (BASELINE.md round-10), answers identical.
+        # SMALL-STAR: large rows are (x, y) with x > y, so Γ⁻(x) is the
+        # partition's y set; link each y and x itself to m' = min Γ⁻(x).
+        # (m', m') is the one self-loop this emits; it is dropped.
+        m = F.col("m")
         e = (
-            nbrs.join(mins, "u")
-            .where(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
+            large.select("x", "y", F.min(y).over(by_node).alias("m"))
+            .select(
+                F.explode(
+                    F.array(
+                        F.struct(y.alias("x"), m.alias("y")),
+                        F.struct(x.alias("x"), m.alias("y")),
+                    )
+                ).alias("p")
+            )
+            .select("p.x", "p.y")
+            .where(x != y)
         )
-        # SMALL-STAR: edges are oriented u > v, so Γ⁻(u) is u's full
-        # smaller neighborhood; link each of them AND u itself to
-        # m = min(Γ⁻(u)).  (x, m) has x ≥ m with x = m only for the
-        # min itself — dropped as a self-loop.
-        mins2 = e.groupBy("u").agg(F.min("v").alias("m"))
-        e = (
-            e.join(mins2, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .union(mins2.select(F.col("u"), F.col("m").alias("v")))
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-            .localCheckpoint(eager=False)  # materialized by the stats job
-        )
-        # Bounded driver action: one scalar row — this job ALSO
-        # materializes the round's lazy checkpoint (see loop header).
-        row = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("u").cast("decimal(38,0)")).alias("su"),
-            F.sum(F.col("v").cast("decimal(38,0)")).alias("sv"),
-        ).first()
-        stat = (row["n"], row["su"], row["sv"])
-        if stat == prev_stat and prev_e is not None:
-            # Exact confirmation: equal counts + empty difference ⇒
-            # identical edge sets (both sides are distinct sets).
-            if prev_e.exceptAll(e).limit(1).count() == 0:
-                break
-        prev_stat, prev_e = stat, e
     else:
         raise RuntimeError("star contraction did not converge in 32 rounds")
-    # At the fixpoint e is a disjoint star set (u → component min);
-    # component minima and isolated nodes label themselves.
-    heads = e.groupBy("u").agg(F.min("v").alias("label")).select(
-        F.col("u").alias(node_col), "label"
+    # At the fixpoint every node with an edge is a centre (its own
+    # label) or a leaf of the centre; isolated nodes label themselves.
+    heads = star.groupBy("x").agg(F.min("mn").alias("mn")).select(
+        x.alias(node_col), F.least(x, "mn").alias("label")
     )
     return nodes.select(node_col).join(heads, node_col, "left").select(
         node_col,
@@ -419,13 +408,7 @@ def llm_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     repo's demonstration that 'iterative algorithm' need not mean
     'rows-only'."""
     docs = load_table(spark, sf_dir, "documents")
-    # dedup=False (r16): connected_components' first step is its own
-    # orient+distinct, so the pairs-level distinct was a second full
-    # shuffle of the key's largest relation — let the banded multiset
-    # flow straight into that single canonicalizing distinct.
-    edges = _simhash60_pairs(_simhash60_sigs(docs), dedup=False).select(
-        "a_id", "b_id"
-    )
+    edges = _simhash60_pairs(_simhash60_sigs(docs)).select("a_id", "b_id")
     labels = connected_components(
         docs.select("doc_id"), edges, node_col="doc_id"
     )

@@ -193,9 +193,9 @@ def graph_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PAGERANK TO CONVERGENCE — graph_pagerank's per-round plan (same
     integer fixpoint arithmetic, same purchase graph) driven by a
     RESIDUAL STOPPING RULE instead of a fixed unroll: after each round,
-    residual = Σ_nodes |Δrank_micro| (one 1-row aggregate action, the
-    dedup_graph convergence-triple discipline); stop when it falls to
-    ≤ 0.1 rank-units per node (residual ≤ n·100000), cap 40.
+    residual = Σ_nodes |Δrank_micro| (one 1-row aggregate action);
+    stop when it falls to ≤ 0.1 rank-units per node (residual ≤
+    n·100000), cap 40.
 
     This is the production story graph_pagerank's docstring promises:
     round count is DATA-DRIVEN (18 on the sf0.01 fixture, emitted as
@@ -226,8 +226,7 @@ def graph_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     # next driver action that reads it (deg by the count below,
     # edge_deg by round 0's residual job, each round's ranks by its
     # residual .first()), so no separate blocking materialization job
-    # runs per round — the dedup_graph r9 measurement (two jobs/round
-    # -> one) applied to this loop.
+    # runs per round.
     edge_deg = (
         sym.join(deg, sym["u"] == deg["node"])
         .select("u", "v", "deg")

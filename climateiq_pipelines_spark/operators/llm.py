@@ -1250,24 +1250,18 @@ def _simhash60_sigs(docs: DataFrame) -> DataFrame:
     return sigs
 
 
-def _simhash60_pairs(sigs: DataFrame, dedup: bool = True) -> DataFrame:
+def _simhash60_pairs(sigs: DataFrame) -> DataFrame:
     """(a_id, b_id, hamming ≤ 3) pairs from 4×15-bit pigeonhole banding
     over the 60-bit signatures — recall exactly 1.0 for Hamming ≤ 3
     (a pair within distance 3 must agree on ≥1 whole band). The shuffle
     carries (band_val, doc_id): ~64 bytes/doc at any corpus size.
 
-    r16 optimization (guide §2.3, shuffle fewer bytes): the hamming ≤ 3
-    filter runs BEFORE the cross-band distinct — hamming is a function
-    of the pair, so filter-then-distinct ≡ distinct-then-filter, and the
-    distinct's exchange now carries only true near-dup candidates
-    instead of every band collision (at scale the false-candidate mass
-    is the dominant term; at sf0.1 measured neutral-to-positive).
-    ``dedup=False`` additionally skips the distinct for consumers that
-    canonicalize the pair set themselves (llm_dedup_clusters feeds
-    connected_components, whose first step is its own orient+distinct —
-    the double distinct was one full extra shuffle of the largest
-    relation in that key; full-key A/B 3.52–3.85 s → 3.26–3.49 s,
-    results identical). Rows may then repeat per shared band."""
+    Each pair is emitted once, by the LOWEST band its two signatures
+    share: a band-k match is dropped when an earlier band of
+    sig_a XOR sig_b is also zero. That is a function of the pair alone,
+    so the filter is lossless and runs inside the join's output with no
+    shuffle — the pair set is unique by construction, where a distinct
+    over every shared-band repeat would cost a full exchange."""
     band = F.explode(
         F.array(
             *[
@@ -1292,14 +1286,20 @@ def _simhash60_pairs(sigs: DataFrame, dedup: bool = True) -> DataFrame:
         F.col("doc_id").alias("b_id"), F.col("sig").alias("b_sig"),
         "band_id", "band_val",
     )
-    hamming = F.bit_count(F.col("a_sig").bitwiseXOR(F.col("b_sig")))
-    out = (
+    xor = F.col("a_sig").bitwiseXOR(F.col("b_sig"))
+    first_shared = F.lit(3)
+    for k in (2, 1, 0):
+        first_shared = F.when(
+            F.shiftright(xor, 15 * k).bitwiseAND(F.lit(0x7FFF)) == 0, k
+        ).otherwise(first_shared)
+    hamming = F.bit_count(xor)
+    return (
         a.join(b, ["band_id", "band_val"])
         .filter(F.col("a_id") < F.col("b_id"))
         .filter(hamming <= 3)
+        .filter(F.col("band_id") == first_shared)
         .select("a_id", "b_id", hamming.cast("long").alias("hamming"))
     )
-    return out.distinct() if dedup else out
 
 
 @register("llm_simhash_neardup", oracle=_SIMHASH_NEARDUP_ORACLE)

@@ -791,6 +791,38 @@ def test_bench_gated_summary_scan_skips_non_dict_json():
     assert bg.extract_summary(real + "\n" + newer)["value"] == 59.0
 
 
+def test_bench_reclaim_flag_accepts_only_0_or_1(monkeypatch):
+    """SPARK_BENCH_RECLAIM is parsed strictly: "0"/"1" (unset = "1")
+    pick the mode; any other value — "false", "", "yes" — exits
+    non-zero naming the variable, before a session is started."""
+    import os
+    import subprocess
+    import sys
+
+    import bench
+
+    monkeypatch.delenv("SPARK_BENCH_RECLAIM", raising=False)
+    assert bench.reclaim_between_keys() is True
+    monkeypatch.setenv("SPARK_BENCH_RECLAIM", "1")
+    assert bench.reclaim_between_keys() is True
+    monkeypatch.setenv("SPARK_BENCH_RECLAIM", "0")
+    assert bench.reclaim_between_keys() is False
+    for bad in ("false", "", "yes", " 1"):
+        monkeypatch.setenv("SPARK_BENCH_RECLAIM", bad)
+        with pytest.raises(SystemExit) as exc:
+            bench.reclaim_between_keys()
+        assert "SPARK_BENCH_RECLAIM" in str(exc.value.code)
+
+    env = dict(os.environ, SPARK_BENCH_RECLAIM="false")
+    out = subprocess.run(
+        [sys.executable, "bench.py"],
+        capture_output=True, text=True, timeout=120, cwd=REPO_ROOT, env=env,
+    )
+    assert out.returncode != 0
+    assert "SPARK_BENCH_RECLAIM" in out.stderr
+    assert out.stdout == ""
+
+
 def test_driver_window_is_fully_oracle_checkable():
     """Standing policy since round 6 (VERDICT r5 #5): no slot in the
     50-key driver window is wasted on a rows-only key — every key in the

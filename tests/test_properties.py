@@ -10,7 +10,7 @@ never contain.
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -221,19 +221,21 @@ edge_lists = st.lists(
 
 
 @given(raw_edges=edge_lists)
+@example(raw_edges=[(i + 1, i) for i in range(11)])  # 12-node chain
+@example(raw_edges=[(0, 3), (5, 0), (0, 9), (1, 2), (1, 11), (4, 6)])  # stars
 @settings(**SETTINGS)
 def test_connected_components_match_union_find(spark, raw_edges):
     """BOTH component implementations — the registered alternating
     star contraction and the min-label propagation reference — must
     equal a union-find reference on ANY graph: chains, cliques,
-    self-loops, singletons."""
+    singletons. The edges go in unfiltered: both orientations,
+    repeated edges and self-loops included."""
     from climateiq_pipelines_spark.operators.dedup_graph import (
         connected_components,
         connected_components_propagation,
     )
 
     n_nodes = 12
-    edges = [(min(a, b), max(a, b)) for a, b in raw_edges if a != b]
     parent = list(range(n_nodes))
 
     def find(x):
@@ -242,7 +244,7 @@ def test_connected_components_match_union_find(spark, raw_edges):
             x = parent[x]
         return x
 
-    for a, b in edges:
+    for a, b in raw_edges:
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
@@ -252,9 +254,9 @@ def test_connected_components_match_union_find(spark, raw_edges):
         [(v,) for v in range(n_nodes)], "doc_id long"
     )
     edges_df = spark.createDataFrame(
-        edges or [(0, 0)], "a_id long, b_id long"
+        raw_edges or [(0, 0)], "a_id long, b_id long"
     )
-    if not edges:
+    if not raw_edges:
         edges_df = edges_df.limit(0)
     for impl in (connected_components, connected_components_propagation):
         got = {
@@ -262,6 +264,80 @@ def test_connected_components_match_union_find(spark, raw_edges):
             for r in impl(nodes_df, edges_df).collect()
         }
         assert got == expected, impl.__name__
+
+
+def test_star_forest_stop_predicate(spark):
+    """connected_components stops when every node has all neighbours
+    larger or exactly one neighbour. A leaf with two smaller neighbours
+    and a two-level chain 2→1→0 are not star forests; stars centred on
+    their minima (with repeated edges) are."""
+    from climateiq_pipelines_spark.operators.dedup_graph import (
+        _is_star_forest,
+        _neighbourhoods,
+    )
+
+    def stops(edges):
+        e = spark.createDataFrame(edges, "x long, y long")
+        return _is_star_forest(_neighbourhoods(e))
+
+    assert not stops([(2, 0), (2, 1)])  # leaf 2 with two smaller nbrs
+    assert not stops([(2, 1), (1, 0)])  # chain 2 → 1 → 0
+    assert not stops([(0, 1), (1, 2)])  # same chain, other orientation
+    assert not stops([(3, 1), (1, 0), (2, 0)])  # centre 0, leaf 1 hung on
+    assert stops([(1, 0), (0, 2), (3, 0), (3, 0), (5, 4)])
+    assert stops([(7, 6)])
+
+
+band_sigs = st.lists(
+    st.tuples(
+        st.integers(min_value=0, max_value=(1 << 60) - 1),
+        # the base's near-dup: bit flips as (band, offset in band)
+        st.lists(
+            st.tuples(
+                st.integers(min_value=0, max_value=3),
+                st.integers(min_value=0, max_value=14),
+            ),
+            max_size=4,
+        ),
+    ),
+    min_size=1,
+    max_size=6,
+)
+
+
+@given(groups=band_sigs)
+@example(groups=[(0x0123456789ABCDE, [])])
+# the near-dup of group n shares 4 - n bands with its base (n = 0:
+# identical; n = 4: Hamming 4, not a pair)
+@example(groups=[(0x0FEDCBA98765432, [(k, 5) for k in range(n)]) for n in range(5)])
+@settings(**SETTINGS)
+def test_simhash60_pairs_match_brute_force(spark, groups):
+    """_simhash60_pairs over random signatures returns exactly the
+    brute-force Hamming ≤ 3 pair set, each (a_id, b_id) once — also for
+    identical signatures and near-dups sharing 1, 2, 3 or 4 bands."""
+    from climateiq_pipelines_spark.operators.llm import _simhash60_pairs
+
+    sigs = []
+    for base, flips in groups:
+        sigs.append(base)
+        other = base
+        for band, bit in flips:
+            other ^= 1 << (15 * band + bit)
+        sigs.append(other)
+    rows = [(i, sig) for i, sig in enumerate(sigs)]
+    expected = {
+        (i, j, bin(si ^ sj).count("1"))
+        for i, si in rows
+        for j, sj in rows
+        if i < j and bin(si ^ sj).count("1") <= 3
+    }
+    sig_df = spark.createDataFrame(rows, "doc_id long, sig long")
+    got = [
+        (r["a_id"], r["b_id"], r["hamming"])
+        for r in _simhash60_pairs(sig_df).collect()
+    ]
+    assert len(got) == len(set(got)), "duplicate pair rows"
+    assert set(got) == expected
 
 
 norm_texts = st.lists(
