@@ -119,13 +119,19 @@ def lloyd_centroid_row(centroids: DataFrame) -> DataFrame:
 # centroid join, the (vec, c) distance aggregate, and the argmin
 # aggregate.  1e12 is exactly representable in double, so the SQL text
 # round-trips exactly (the r16 float-literal caveat does not bite).
+# A centroid whose dim differs from the vector's raises, naming both
+# dims, instead of scoring a truncated or NULL distance.
 _LLOYD_BEST = (
     "array_min(transform(cents, ct -> struct("
-    "aggregate(sequence(1, size(embedding)), cast(0 as bigint),"
+    "IF(size(ct.carr) != size(embedding),"
+    " raise_error(concat('Lloyd assignment: centroid ', cast(ct.c_id as string),"
+    " ' has ', cast(size(ct.carr) as string), ' dims but the embedding has ',"
+    " cast(size(embedding) as string))),"
+    " aggregate(sequence(1, size(embedding)), cast(0 as bigint),"
     " (acc, i) -> acc + floor("
     "(cast(element_at(embedding, i) as double) - element_at(ct.carr, i))"
     " * (cast(element_at(embedding, i) as double) - element_at(ct.carr, i))"
-    " * 1e12)) as dist,"
+    " * 1e12))) as dist,"
     " ct.c_id as c)))"
 )
 

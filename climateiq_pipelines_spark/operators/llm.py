@@ -1194,21 +1194,31 @@ _SIMHASH_NEARDUP_ORACLE = f"""
 """
 
 
-# Signature relations memoized per (application, input plan): the
-# 60-vote aggregate is the expensive half of every simhash consumer
-# (neardup, multiprobe, dedup clustering), and all of them want the
-# IDENTICAL (doc_id, sig) frame — the graph-edge memoization
-# discipline applied to the signature build. Keyed on the input
-# DataFrame's semanticHash so a different corpus/projection can never
-# alias a cache entry.
+# Signature relations memoized per (application, input plan): every
+# simhash consumer (neardup, dedup clustering) wants the IDENTICAL
+# (doc_id, sig) frame — the graph-edge memoization discipline applied
+# to the signature build. Keyed on the input DataFrame's semanticHash
+# so a different corpus/projection can never alias a cache entry.
 # Registered with session.release_blocks — see graph_ext2._EDGE_CACHE.
 _SIG_CACHE: dict[tuple[str, int], DataFrame] = register_frame_cache({})
 
+# Per row: distinct tokens → first 15 md5 hex digits as a long → one
+# fold into 60 ±1 vote counters; signature bit j is vote j ≥ 0.
+_SIMHASH60_ROW = (
+    "aggregate(transform(array_distinct(split(text, ' ')),"
+    " t -> cast(conv(substr(md5(t), 1, 15), 16, 10) as bigint)),"
+    " array_repeat(0, 60),"
+    " (v, h) -> transform(v, (c, j) -> c + IF((shiftright(h, j) & 1) = 1, 1, -1)),"
+    " v -> aggregate(sequence(0, 59), cast(0 as bigint),"
+    " (sig, j) -> sig | IF(v[j] >= 0, shiftleft(cast(1 as bigint), j), cast(0 as bigint))))"
+)
+
 
 def _simhash60_sigs(docs: DataFrame) -> DataFrame:
-    """(doc_id, sig): 60-bit md5-token simhash — 60 codegen'd
-    conditional vote sums in ONE hash aggregate, sign → bit. Shared by
-    llm_simhash_neardup and the dedup-cluster operator; the
+    """(doc_id, sig): 60-bit md5-token simhash computed inside each row,
+    with no shuffle (doc_id is the documents key, so a row's tokens are
+    the oracle's per-doc token set); null text has no signature row.
+    Shared by llm_simhash_neardup and the dedup-cluster operator; the
     checkpointed result is memoized per session + input plan."""
     cache_key = (
         docs.sparkSession.sparkContext.applicationId,
@@ -1217,35 +1227,12 @@ def _simhash60_sigs(docs: DataFrame) -> DataFrame:
     cached = _SIG_CACHE.get(cache_key)
     if cached is not None:
         return cached
-    # NOT widened (registry.widen_if_narrow measured 0.39 s → 0.48 s
-    # here): _tokens' distinct already shuffles before the 60-way vote
-    # aggregate, so the heavy stage is parallel and a pre-explode
-    # repartition only adds a shuffle.
-    #
-    # r16: the 60 vote sums and the 60-term sign fold are built as SQL
-    # expr strings (integer-only text — no float literal round-trip),
-    # not Column chains: the chained form cost 2.12 s of py4j
-    # round-trips per construction vs 0.46 s for the parsed strings
-    # (measured, outputs bit-identical) — the hyperplane_sig lesson
-    # applied to the 60-bit builder. Paid once per session (the memo
-    # above), i.e. once per bench/sim wall.
-    toks = _tokens(docs)
-    h = F.conv(F.substring(F.md5("token"), 1, 15), 16, 10).cast("long")
-    votes = toks.select("doc_id", h.alias("h")).groupBy("doc_id").agg(
-        *[
-            F.expr(
-                f"sum(CASE WHEN (shiftright(h, {j}) & 1) = 1"
-                " THEN 1 ELSE -1 END)"
-            ).alias(f"v{j}")
-            for j in range(60)
-        ]
+    sigs = (
+        widen_if_narrow(docs.sparkSession, docs)
+        .where(F.col("text").isNotNull())
+        .select("doc_id", F.expr(_SIMHASH60_ROW).alias("sig"))
+        .localCheckpoint()
     )
-    sig_expr = "CAST(0 AS BIGINT) " + " ".join(
-        f"+ (CASE WHEN v{j} >= 0 THEN CAST({1 << j} AS BIGINT)"
-        " ELSE CAST(0 AS BIGINT) END)"
-        for j in range(60)
-    )
-    sigs = votes.select("doc_id", F.expr(sig_expr).alias("sig")).localCheckpoint()
     _SIG_CACHE[cache_key] = sigs
     return sigs
 
@@ -1308,16 +1295,15 @@ def llm_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     simhash) via 4-band pigeonhole pruning — the classic web-dedup
     design, Spark-first:
 
-    1. Per token, h = first 15 md5 hex chars → BIGINT (60 exact bits;
-       md5 is the one hash both engines compute identically — xxhash64
-       and DuckDB hash() are different algorithms).
-    2. Signature: bit j votes +1/−1 per distinct token; 60 codegen'd
-       conditional sums in ONE hash aggregate, sign → bit. No UDF.
-    3. Candidates: split the 60 bits into 4 bands of 15; a pair within
+    1. Signature (_simhash60_sigs): per distinct token, h = first 15
+       md5 hex chars → BIGINT (60 exact bits; md5 is the one hash both
+       engines compute identically — xxhash64 and DuckDB hash() are
+       different algorithms), and bit j is the sign of the ±1 votes.
+    2. Candidates: split the 60 bits into 4 bands of 15; a pair within
        Hamming ≤ 3 must agree on ≥1 whole band (pigeonhole), so the
        band-key equi-self-join has recall exactly 1.0 — proven, not
        sampled, because the all-pairs oracle below checks the output.
-    4. Exact verify: bit_count(sig_a XOR sig_b) ≤ 3 on candidates.
+    3. Exact verify: bit_count(sig_a XOR sig_b) ≤ 3 on candidates.
 
     The oracle is the O(n²) all-pairs twin, so the hash match proves
     the banding lossless on the fixture. Fixture note (probed sf0.01):

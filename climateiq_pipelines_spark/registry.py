@@ -292,16 +292,15 @@ def parquet_first_array_len(
     sf_dir: str, name: str, column: str
 ) -> int | None:
     """Driver-side peek at the length of ``column``'s first non-null
-    array value — a bounded parquet read of one column of the first
-    row group, NO Spark job (the _FOOTER_NTZ_MEMO precedent: fixture
-    metadata is read driver-side where a Spark action would cost a
-    whole job). Used by the block-NL preludes to learn the embedding
+    array value — a parquet read of one column that stops at the first
+    batch holding a non-null value, NO Spark job (the _FOOTER_NTZ_MEMO
+    precedent: fixture metadata is read driver-side where a Spark
+    action would cost a whole job). Used by the block-NL preludes to learn the embedding
     dim without the old ``take(1)`` probe job (VERDICT r16 #5).
-    Returns None when the file is missing/unreadable/empty so callers
-    can fall back to the probe job; the first parquet row is the same
-    row ``take(1)`` reads on these single-file fixtures (and the dim
-    is a fixture-wide constant — the bound formula only needs A
-    representative dim, same as the old first-row probe)."""
+    Returns None when the file is missing/unreadable or has no
+    non-null value, so callers can fall back to the probe job; the dim
+    is a fixture-wide constant, so the bound formula only needs A
+    representative dim, as the old first-row probe did."""
     import os as _os
 
     path = table_path(sf_dir, name)
@@ -311,11 +310,11 @@ def parquet_first_array_len(
         import pyarrow.dataset as _ds
 
         for batch in _ds.dataset(path, format="parquet").to_batches(
-            columns=[column], batch_size=1
+            columns=[column]
         ):
-            if batch.num_rows:
-                v = batch.column(0)[0].as_py()
-                return len(v) if v is not None else None
+            values = batch.column(0).drop_null()
+            if len(values):
+                return len(values[0].as_py())
         return None
     except Exception:  # noqa: BLE001 — fall back to the Spark probe
         return None

@@ -265,20 +265,32 @@ def test_connected_components_match_union_find(spark, raw_edges):
         }
         assert got == expected, impl.__name__
 
+    # nodes with repeated keys and an extra column: every row comes
+    # back, with its own extra value and its node's label
+    rows = [(v, 100 + v) for v in range(n_nodes)] + [
+        (v, 200 + v) for v in range(0, n_nodes, 3)
+    ]
+    tagged = spark.createDataFrame(rows, "doc_id long, tag long")
+    got = sorted(
+        (r["doc_id"], r["tag"], r["label"])
+        for r in connected_components(tagged, edges_df).collect()
+    )
+    assert got == sorted((v, t, expected[v]) for v, t in rows)
+
 
 def test_star_forest_stop_predicate(spark):
     """connected_components stops when every node has all neighbours
-    larger or exactly one neighbour. A leaf with two smaller neighbours
-    and a two-level chain 2→1→0 are not star forests; stars centred on
-    their minima (with repeated edges) are."""
-    from climateiq_pipelines_spark.operators.dedup_graph import (
-        _is_star_forest,
-        _neighbourhoods,
-    )
+    larger or exactly one neighbour, read from the flag observed on the
+    round's checkpoint. A leaf with two smaller neighbours and a
+    two-level chain 2→1→0 are not star forests; stars centred on their
+    minima (with repeated edges) are, and so is an empty edge set."""
+    from climateiq_pipelines_spark.operators.dedup_graph import _star_checkpoint
 
     def stops(edges):
-        e = spark.createDataFrame(edges, "x long, y long")
-        return _is_star_forest(_neighbourhoods(e))
+        e = spark.createDataFrame(edges or [(0, 1)], "x long, y long")
+        star, done = _star_checkpoint(e if edges else e.limit(0))
+        assert star.count() == 2 * len(edges)  # both orientations
+        return done
 
     assert not stops([(2, 0), (2, 1)])  # leaf 2 with two smaller nbrs
     assert not stops([(2, 1), (1, 0)])  # chain 2 → 1 → 0
@@ -286,6 +298,105 @@ def test_star_forest_stop_predicate(spark):
     assert not stops([(3, 1), (1, 0), (2, 0)])  # centre 0, leaf 1 hung on
     assert stops([(1, 0), (0, 2), (3, 0), (3, 0), (5, 4)])
     assert stops([(7, 6)])
+    assert stops([])  # no edges: the observed flag is null
+
+
+doc_texts = st.lists(
+    st.one_of(
+        st.none(),
+        # runs of spaces give empty tokens; a small vocabulary repeats
+        # tokens inside a text
+        st.lists(
+            st.sampled_from(["a", "dup", "scan", "spark", "naïve", "", "  "]),
+            min_size=1,
+            max_size=12,
+        ).map(" ".join),
+    ),
+    min_size=1,
+    max_size=8,
+)
+
+
+def _simhash60_reference(text: str) -> int:
+    """Python twin of the oracle's signature: each distinct token votes
+    ±1 per bit of its first 15 md5 hex digits; bit j is set iff its
+    vote sum is ≥ 0."""
+    import hashlib
+
+    hs = [
+        int(hashlib.md5(t.encode("utf-8")).hexdigest()[:15], 16)
+        for t in set(text.split(" "))
+    ]
+    sig = 0
+    for j in range(60):
+        if sum(1 if (h >> j) & 1 else -1 for h in hs) >= 0:
+            sig |= 1 << j
+    return sig
+
+
+@given(texts=doc_texts)
+@example(texts=["spark spark spark dup", "a", "a  a   dup ", "", None])
+@settings(**SETTINGS)
+def test_simhash60_sigs_match_reference(spark, texts):
+    """_simhash60_sigs computes each row's signature over its DISTINCT
+    tokens (repeats vote once; empty tokens from runs of spaces count),
+    and a row with null text has no signature row."""
+    from climateiq_pipelines_spark.operators.llm import _simhash60_sigs
+
+    docs = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"
+    )
+    got = {r["doc_id"]: r["sig"] for r in _simhash60_sigs(docs).collect()}
+    assert got == {
+        i: _simhash60_reference(t) for i, t in enumerate(texts) if t is not None
+    }
+
+
+sig_docs = st.lists(
+    st.tuples(
+        st.integers(min_value=0, max_value=5),  # base signature
+        st.lists(st.integers(min_value=0, max_value=59), max_size=4),  # flips
+    ),
+    min_size=1,
+    max_size=16,
+)
+
+
+@given(docs=sig_docs)
+@example(docs=[(0, [])] * 4 + [(0, [1]), (1, [])])  # shared sig + near-dup
+@example(docs=[(0, [j for j in range(k)]) for k in range(5)])  # Hamming chain
+@settings(**SETTINGS)
+def test_signature_components_match_union_find(spark, docs):
+    """Clustering one representative per distinct signature gives every
+    document the label union-find gives it over brute-force document
+    pairs with Hamming ≤ 3 — many documents share a signature."""
+    from climateiq_pipelines_spark.operators.dedup_graph import (
+        _signature_components,
+    )
+
+    bases = [0x0123456789ABCDE, 0x0FEDCBA98765432, 0, (1 << 60) - 1, 7, 1 << 59]
+    rows = []
+    for doc_id, (base, flips) in enumerate(docs):
+        sig = bases[base]
+        for bit in flips:
+            sig ^= 1 << bit
+        rows.append((doc_id, sig))
+    parent = list(range(len(rows)))
+
+    def find(v):
+        while parent[v] != v:
+            parent[v] = parent[parent[v]]
+            v = parent[v]
+        return v
+
+    for i, si in rows:
+        for j, sj in rows:
+            if i < j and bin(si ^ sj).count("1") <= 3:
+                ri, rj = find(i), find(j)
+                parent[max(ri, rj)] = min(ri, rj)
+    sig_df = spark.createDataFrame(rows, "doc_id long, sig long")
+    got = {r["doc_id"]: r["label"] for r in _signature_components(sig_df).collect()}
+    assert got == {i: find(i) for i, _ in rows}
 
 
 band_sigs = st.lists(
@@ -372,3 +483,40 @@ def test_text_normalize_idempotent(spark, texts):
     ).collect()
     for r in out:
         assert r["once"] == r["twice"], repr(r)
+
+
+def test_dedup_clusters_keep_null_text_docs(spark, tmp_path):
+    """A document with null text has no signature but stays in
+    llm_dedup_clusters' output as a singleton, as in the oracle; an
+    empty text is one empty token and does get a signature."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from climateiq_pipelines_spark.parity import compare_frames
+    from climateiq_pipelines_spark.plans import ORACLES, QUERIES
+
+    texts = ["a b c", None, "c b a a", "spark scan", None, "", "scan spark"]
+    n = len(texts)
+    path = tmp_path / "documents.parquet"
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": pa.array(range(n), pa.int64()),
+                "text": pa.array(texts, pa.string()),
+                "lang": pa.array(["en"] * n, pa.string()),
+                "source": pa.array(["src0"] * n, pa.string()),
+                "n_chars": pa.array([len(t or "") for t in texts], pa.int64()),
+            }
+        ),
+        path,
+    )
+    got = QUERIES["llm_dedup_clusters"](spark, str(tmp_path)).toPandas()
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{path}')")
+    want = con.execute(ORACLES["llm_dedup_clusters"]).fetchdf()
+    con.close()
+    result = compare_frames("llm_dedup_clusters", got, want)
+    assert result.ok, result.reasons
+    labels = dict(zip(got["doc_id"], got["cluster_id"]))
+    assert (labels[1], labels[4], labels[2], labels[6]) == (1, 4, 0, 3)

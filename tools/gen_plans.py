@@ -31,6 +31,7 @@ SHOWCASE = [
     ("llm_minhash_neardup", "r7 size guard: bounded take-probe dispatches to the banded LSH plan above ALLPAIRS_MAX_DOCS — below it, the checked exact posting-list join"),
     ("llm_minhash_lsh", "one-pass 16-min signature aggregate, band-key self-join, no cartesian"),
     ("llm_simhash_neardup", "band equi-join candidates — the all-pairs oracle twin never executes"),
+    ("llm_dedup_clusters", "one node per distinct signature: the star rounds run in the builder, so only the rep window, the label join and the cluster-size window remain"),
     ("llm_ivf_topk", "cogrouped Arrow re-rank (FlatMapCoGroupsInPandas) after cell-key joins"),
     ("llm_ivf_pq_topk", "ADC joins carry scalar longs only; exact re-rank limited to the shortlist"),
     ("llm_corpus_pipeline", "three digest-keyed shuffles, map-side partial aggregation throughout"),
