@@ -281,10 +281,11 @@ def agg_stats_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # conversion replaces five double->decimal casts and the moment
     # products stay in long arithmetic.
     #
-    # r17 (VERDICT r16 #6): TWO-LEVEL exact sums like agg_linear_fit —
-    # level 1 sums pure LONG partials per (flag, scan partition),
-    # fully codegen'd; level 2 merges the tiny |groups|x|partitions|
-    # relation in decimal(38,0). The one term agg_linear_fit's recipe
+    # TWO-LEVEL exact sums like agg_linear_fit — level 1 sums pure LONG
+    # partials per (flag, scan partition), fully codegen'd; level 2
+    # merges the tiny |groups|x|partitions| relation in decimal(38,0),
+    # instead of casting every row's five products to decimal(30,0)
+    # (the BigDecimal slow path). The one term agg_linear_fit's recipe
     # could not take — yc² at ~1.2e14/row would overflow a 1e6-row
     # partition's long partial — is SPLIT HI/LO at 2^32:
     # yc² = yq·2^32 + yr with yq = shiftright(yc², 32) ≤ ~2.8e4 and
@@ -295,8 +296,19 @@ def agg_stats_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # results are layout-independent (determinism probe key). Per-row
     # domain bound unchanged from the single-level form: yc*yc is
     # evaluated in long, so |yc| < 3.03e9 cents (price < ~3e7 units).
-    # The old form cast every row's products to decimal(30,0) — the
-    # BigDecimal slow path on 5 products per row.
+    #
+    # Σ(xc·yc) is NOT split; its partial is a recorded domain limit.
+    # Per row, xc ≤ 5,000 (l_quantity ≤ 50) and yc ≤ ~1.05e7
+    # (l_extendedprice ≤ ~104,950), so xc·yc ≤ ~5.25e10 — far inside
+    # long. The partial psxy overflows int64 (9.22e18) only past
+    # ~1.76e8 rows of one (flag, scan partition); a 128 MB scan
+    # partition holds ~7.4e6 rows at the fixtures' ~18 parquet bytes per
+    # lineitem row, ~24x below (the ratio holds at every SF). Beyond
+    # it the sum raises ARITHMETIC_OVERFLOW under ANSI (the Spark 4
+    # default) and wraps silently with ANSI off — split psxy at 2^32
+    # like yc² if partitions that large or prices outside the TPC-H
+    # domain must be served. Σxc² (≤ 2.5e7/row, ~3.7e11 rows) and
+    # Σxc, Σyc are further from the limit.
     li = load_table(spark, sf_dir, "lineitem")
     xc = F.round(F.col("l_quantity") * 100).cast("long")
     yc = F.round(F.col("l_extendedprice") * 100).cast("long")

@@ -505,9 +505,8 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketed write+read round-trip loses nothing.
 
     Housekeeping: table/dir names carry a per-invocation token so
-    concurrent sessions sharing a metastore never collide, and the temp
-    dir is removed at interpreter exit (repeated bench runs don't
-    accumulate disk)."""
+    concurrent sessions sharing a metastore never collide; the temp dir
+    and both tables are reclaimed by session.release_blocks."""
     import os
     import uuid
 
@@ -521,14 +520,10 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     token = uuid.uuid4().hex[:12]
-    # Registered for post-consumption reclaim like every other mkdtemp
-    # site (round-12 registry; this was the one key left on the
-    # process-exit-only atexit path, so a warm session accumulated full
-    # bucketed copies of orders AND customer per evaluation).  The
-    # per-invocation catalog tables ride the same lifecycle: dropped by
-    # release_blocks after consumption, so a warm session's catalog
-    # stays bounded instead of accumulating dead unique-named entries
-    # (ADVICE r12).
+    # The dir and the per-invocation catalog tables are freed together
+    # by release_blocks after consumption, so a warm session neither
+    # accumulates bucketed copies of orders and customer nor dead
+    # unique-named catalog entries.
     d = new_temp_dir("bucketed_join")
     t_orders = register_temp_table(f"cps_bkt_orders_{token}")
     t_cust = register_temp_table(f"cps_bkt_customer_{token}")

@@ -36,7 +36,7 @@ from climateiq_pipelines_spark.registry import (
     parquet_first_array_len,
     widen_if_narrow,
 )
-from climateiq_pipelines_spark.session import register_frame_cache
+from climateiq_pipelines_spark.session import memo
 
 # ---------------------------------------------------------------- helpers
 
@@ -1194,14 +1194,6 @@ _SIMHASH_NEARDUP_ORACLE = f"""
 """
 
 
-# Signature relations memoized per (application, input plan): every
-# simhash consumer (neardup, dedup clustering) wants the IDENTICAL
-# (doc_id, sig) frame — the graph-edge memoization discipline applied
-# to the signature build. Keyed on the input DataFrame's semanticHash
-# so a different corpus/projection can never alias a cache entry.
-# Registered with session.release_blocks — see graph_ext2._EDGE_CACHE.
-_SIG_CACHE: dict[tuple[str, int], DataFrame] = register_frame_cache({})
-
 # Per row: distinct tokens → first 15 md5 hex digits as a long → one
 # fold into 60 ±1 vote counters; signature bit j is vote j ≥ 0.
 _SIMHASH60_ROW = (
@@ -1219,22 +1211,18 @@ def _simhash60_sigs(docs: DataFrame) -> DataFrame:
     with no shuffle (doc_id is the documents key, so a row's tokens are
     the oracle's per-doc token set); null text has no signature row.
     Shared by llm_simhash_neardup and the dedup-cluster operator; the
-    checkpointed result is memoized per session + input plan."""
-    cache_key = (
-        docs.sparkSession.sparkContext.applicationId,
+    checkpointed result is memoized per input plan (its semanticHash,
+    so a different corpus or projection never aliases an entry)."""
+    spark = docs.sparkSession
+    return memo(
+        spark,
+        "simhash60_sigs",
         docs.semanticHash(),
-    )
-    cached = _SIG_CACHE.get(cache_key)
-    if cached is not None:
-        return cached
-    sigs = (
-        widen_if_narrow(docs.sparkSession, docs)
+        lambda: widen_if_narrow(spark, docs)
         .where(F.col("text").isNotNull())
         .select("doc_id", F.expr(_SIMHASH60_ROW).alias("sig"))
-        .localCheckpoint()
+        .localCheckpoint(),
     )
-    _SIG_CACHE[cache_key] = sigs
-    return sigs
 
 
 def _simhash60_pairs(sigs: DataFrame) -> DataFrame:

@@ -774,15 +774,14 @@ def llm_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     vocab = dw.groupBy("w").agg(F.sum("n").alias("cnt"))
     # Vocabulary grows with the corpus (Heaps ~n^0.5), so the broadcast
-    # is gated on the measured vocab size (round-12 review: the hint
-    # bypasses autoBroadcastJoinThreshold, and an ungated broadcast of
-    # a 100 TB corpus's vocab pins hundreds of MB per executor); above
-    # the bound the join shuffles on w — the standard plan.  The count
-    # is memoized per (session, sf_dir) so repeated evaluations skip
-    # the probe action (VERDICT r12 #4 — the gate stays).
-    from climateiq_pipelines_spark.session import gate_count
+    # is gated on the measured vocab size (the hint bypasses
+    # autoBroadcastJoinThreshold, and an ungated broadcast of a 100 TB
+    # corpus's vocab pins hundreds of MB per executor); above the bound
+    # the join shuffles on w — the standard plan.  The count is memoized
+    # per sf_dir so repeated evaluations skip the probe action.
+    from climateiq_pipelines_spark.session import memo
 
-    if gate_count(vocab, spark, sf_dir, "unigram_vocab") <= 2_000_000:
+    if memo(spark, "gate:unigram_vocab", sf_dir, vocab.count) <= 2_000_000:
         vocab = F.broadcast(vocab)
     bits = F.length(F.bin(F.col("cnt")))
     return (

@@ -1,4 +1,4 @@
-"""SparkSession factory.
+"""SparkSession factory and the session lifecycle.
 
 Single shared session per process: BASELINE.md shows session startup
 (~4.3 s) dominates per-query time (~0.5 s warm) at bench scale, so every
@@ -13,11 +13,23 @@ Scale notes (100 TB target, local[N] test harness):
   a fixed partition count.
 - Arrow enabled so the few Pandas-UDF operators (SURVEY §2.11) move
   columnar batches, not pickled rows.
+
+Lifecycle rule: whatever a session keeps between calls lives in this
+module's three registries — ``memo`` entries, ``SESSION_TEMP_DIRS``
+and the catalog drop list — and ``release_blocks`` frees all of them
+together, after the caller has consumed the unit's result. A memo keeps
+one live key per name, so a new sf_dir, input plan or session evicts
+the old entry.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
+from collections.abc import Callable, Hashable
+from typing import Any
 
 from pyspark.sql import SparkSession
 
@@ -53,239 +65,115 @@ def get_spark(
     return spark
 
 
-# Module-level caches of CHECKPOINTED DataFrames (the session-memoized
-# derived frames: graph edge lists, simhash signature relations).
-# Registered here so release_blocks can drop the Python handles before
-# unpersisting — a cached DataFrame whose checkpoint blocks were
-# unpersisted is poison (lineage is truncated, so any reuse dies with
-# CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND; measured on llm_dedup_clusters /
-# graph_label_propagation in the first round-12 reclaim sweep).  The
-# caches rebuild on next use — trading the ~2.5 s warm-reuse per
-# dependent key for deterministic reclaim.
-SESSION_FRAME_CACHES: list[dict] = []
+# name -> ((applicationId, key), value, lazy)
+SESSION_MEMO: dict[str, tuple[tuple[str, Hashable], Any, bool]] = {}
 
-# Caches whose entries are LAZY plans only (no checkpoint blocks, no
-# materialized state — e.g. registry._TABLE_MEMO's resolved relations).
-# They are still cleared by a full release_blocks (the long-lived-
-# session hygiene the meta-test pins), but a caller reclaiming purely
-# for PER-KEY TIMING ATTRIBUTION (bench.py, VERDICT r16 #4) may keep
-# them: re-resolving table metadata is catalog work every key would
-# share on a real deployment, not a frame one key built for another.
-LAZY_METADATA_CACHES: list[dict] = []
-
-
-def register_frame_cache(cache: dict, *, materialized: bool = True) -> dict:
-    """Register a module-level {key: DataFrame} cache holding
-    checkpointed frames; release_blocks clears every registered cache
-    before unpersisting so no stale checkpoint handle survives.
-    ``materialized=False`` marks a cache holding only lazy plans (no
-    blocks) that release_blocks(keep_lazy_metadata=True) may retain."""
-    SESSION_FRAME_CACHES.append(cache)
-    if not materialized:
-        LAZY_METADATA_CACHES.append(cache)
-    return cache
-
-
-# Temp-dir registry (round-12 code review): scan/sink/txn operators
-# materialize fixture slices under tempfile.mkdtemp and RETURN a lazy
-# DataFrame that reads those files, so the operator itself can never
-# delete its directory — the caller consumes the result after the call
-# returns.  Without reclaim, every run of the 12 mkdtemp-using keys
-# leaks full parquet copies into /tmp for the life of the host (the
-# txn keys alone write ~6 file groups per call).  Operators register
-# their roots here; release_blocks purges them AFTER the harness has
-# consumed the key's result (the same lifecycle as checkpoint blocks),
-# and an atexit hook covers sessions that never reclaim (bench.py's
-# warm-session protocol, the external driver).
+# Scratch roots whose files a returned frame still reads lazily, so the
+# operator that wrote them can never delete them itself.
 SESSION_TEMP_DIRS: list[str] = []
 
+# ("TABLE" | "VIEW", name) catalog entries to DROP on reclaim.
+SESSION_CATALOG_DROPS: list[tuple[str, str]] = []
 
-def register_temp_dir(path: str) -> str:
-    """Register a mkdtemp root for deterministic post-consumption
-    cleanup; returns the path unchanged so call sites stay one line."""
+
+def memo(
+    spark: SparkSession,
+    name: str,
+    key: Hashable,
+    build: Callable[[], Any],
+    *,
+    lazy: bool = False,
+) -> Any:
+    """``build()``'s value for ``key`` under ``name``, built once per
+    (application, key). A new key replaces the name's entry; dropping
+    the last reference to an evicted checkpointed frame lets Spark's
+    ContextCleaner free its blocks. ``lazy=True`` marks a value that
+    pins no blocks or files (a lazy plan, a footer flag), which
+    ``release_blocks(keep_lazy_metadata=True)`` keeps."""
+    full_key = (spark.sparkContext.applicationId, key)
+    entry = SESSION_MEMO.get(name)
+    if entry is not None and entry[0] == full_key:
+        return entry[1]
+    value = build()
+    SESSION_MEMO[name] = (full_key, value, lazy)
+    return value
+
+
+def new_temp_dir(tag: str) -> str:
+    """Create a scratch dir that ``release_blocks`` purges; the only
+    sanctioned way an operator materializes scratch files. The prefix
+    is always ``cps_{tag}_`` so purge audits can attribute every root."""
+    path = tempfile.mkdtemp(prefix=f"cps_{tag}_")
     SESSION_TEMP_DIRS.append(path)
     return path
 
 
-def new_temp_dir(tag: str) -> str:
-    """Create AND register a session temp dir in one call (round-13
-    review batch B's recorded deferral): ``new_temp_dir("csv")`` is the
-    only sanctioned way an operator materializes scratch files — the
-    raw ``register_temp_dir(tempfile.mkdtemp(...))`` two-step left each
-    call site one forgotten wrap away from a /tmp leak.  The prefix is
-    always ``cps_{tag}_`` so purge audits can attribute every root."""
-    import tempfile
-
-    return register_temp_dir(tempfile.mkdtemp(prefix=f"cps_{tag}_"))
-
-
-# Broadcast-gate count memo (VERDICT r12 task #4): the round-12
-# measured-payload broadcast gates (graph adjacency / LPA labels /
-# unigram vocab) each cost one count() action per evaluation — ~0.3 s
-# across the bench's repeated HEADLINE runs.  The counted relations are
-# deterministic per (application, sf_dir) — fixture-derived, built from
-# already-checkpointed bases — so the scalar is memoized and repeated
-# evaluations skip the probe.  The GATES themselves stay: at 100 TB the
-# count is what stops a multi-hundred-MB relation from being pinned on
-# every executor (F.broadcast bypasses autoBroadcastJoinThreshold).
-# Values are plain ints (no filesystem or block state), but
-# release_blocks still CLEARS the memo (round-13 self-review): a
-# session that swaps the data behind an sf_dir must never gate a
-# broadcast on a stale count, and re-deriving the scalar costs one
-# aggregate per gate site per evaluation.  r17: bench.py now reclaims
-# between HEADLINE keys by default (VERDICT r16 #4), so each key's
-# min-of-2 re-derives its own gate counts — part of that key's work.
-_GATE_COUNT_MEMO: dict[tuple[str, str, str], int] = {}
-
-
-def gate_count(df, spark: SparkSession, sf_dir: str, site: str) -> int:
-    """Memoized df.count() for broadcast-payload gates.  ``site`` names
-    the gate (one relation per site), so the memo key is
-    (applicationId, sf_dir, site) — per-session, per-scale, never
-    shared across fixtures."""
-    key = (spark.sparkContext.applicationId, sf_dir, site)
-    n = _GATE_COUNT_MEMO.get(key)
-    if n is None:
-        n = df.count()
-        _GATE_COUNT_MEMO[key] = n
-    return n
-
-
-# Catalog-table registry (ADVICE r12): join_bucketed_colocated
-# saveAsTable's two per-invocation EXTERNAL tables whose backing files
-# live in a registered temp dir — purge_temp_dirs reclaims the files,
-# but the catalog entries survived, so a warm session accumulated
-# unbounded metastore rows pointing at deleted paths.  Same lifecycle
-# as the dirs: registered by the operator, dropped by release_blocks
-# after the key's result is consumed.
-SESSION_TEMP_TABLES: list[str] = []
-
-
 def register_temp_table(name: str) -> str:
-    """Register a saveAsTable name for deterministic post-consumption
-    DROP; returns the name unchanged so call sites stay one line."""
-    SESSION_TEMP_TABLES.append(name)
+    """Register a saveAsTable name for DROP on reclaim; returns the name
+    unchanged so call sites stay one line."""
+    SESSION_CATALOG_DROPS.append(("TABLE", name))
     return name
-
-
-# Memory-sink temp views (round-13 review batch C): the streaming demo
-# keys run availableNow queries into uniquely-named MEMORY sinks whose
-# full result rows live in driver memory behind a temp view for the
-# session lifetime — a warm many-key session accumulated 4 new views
-# per sweep, and stream_stream_join_demo's sink holds a data-sized
-# join result.  Same lifecycle as the dirs/tables: registered by the
-# operator, dropped by release_blocks after the key's result is
-# consumed.
-SESSION_TEMP_VIEWS: list[str] = []
 
 
 def register_temp_view(name: str) -> str:
-    """Register a memory-sink temp view for deterministic
-    post-consumption dropTempView; returns the name unchanged."""
-    SESSION_TEMP_VIEWS.append(name)
+    """Register a temp view or memory-sink query name for DROP on
+    reclaim; returns the name unchanged."""
+    SESSION_CATALOG_DROPS.append(("VIEW", name))
     return name
 
 
-def purge_temp_dirs() -> int:
-    """Remove every registered temp root; returns how many were
-    purged.  Safe to call at any point where no live DataFrame still
-    reads from the registered dirs — i.e. after the current unit's
-    result is fully consumed (toPandas/collect), never between
-    building a frame and acting on it."""
-    import shutil
-
-    n = 0
+def _purge_temp_dirs() -> None:
     while SESSION_TEMP_DIRS:
         shutil.rmtree(SESSION_TEMP_DIRS.pop(), ignore_errors=True)
-        n += 1
-    return n
 
 
-import atexit as _atexit  # noqa: E402  (registry must exist first)
-
-_atexit.register(purge_temp_dirs)
+# Sessions that never reclaim (bench.py's warm mode, the external
+# driver) still leave no scratch files behind.
+atexit.register(_purge_temp_dirs)
 
 
 def release_blocks(spark: SparkSession, *, keep_lazy_metadata: bool = False) -> int:
-    """Unpersist every persistent RDD and cached relation; returns how
-    many RDDs were released.
+    """Free everything the session keeps between calls; returns how
+    many persistent RDDs were released.
 
-    ``keep_lazy_metadata=True`` (bench.py's between-key reclaim,
-    VERDICT r16 #4) retains caches registered with
-    ``materialized=False`` — lazy resolved-relation memos with no
-    blocks — while still clearing every checkpointed frame cache, all
-    persistent RDDs, the gate-count memo, temp dirs/tables/views.
+    Clears memo entries (all but the ``lazy`` ones when
+    ``keep_lazy_metadata=True``), unpersists every persistent RDD and
+    cached relation, drops the registered catalog tables and views,
+    and purges the registered temp dirs.
 
-    Several operators localCheckpoint a relation they RETURN (diamond
-    reuse, fixpoint bases, optimization barriers) — the checkpoint must
-    outlive the call, so the operator itself cannot unpersist it.  The
-    blocks are reclaimed lazily by the ContextCleaner when the RDD is
-    garbage-collected, but a HARNESS that runs hundreds of keys in one
-    session (parity_sweep, driver_sim — or any long-lived production
-    session at 100 TB) should reclaim deterministically between units
-    of work: round-12 measured the leak making sweep timings
-    ORDER-DEPENDENT (llm_ann_recall_eval 13.4 s in r11's key order vs
-    40.5 s in r12's, on a quiet host, code untouched; 17.4 s cold /
-    3.5 s warm in a fresh session).  Call AFTER the unit's result is
-    fully consumed (e.g. toPandas) — never between building a
+    Operators localCheckpoint relations they return (diamond reuse,
+    fixpoint bases, optimization barriers) and stage files their result
+    reads, so they cannot free either themselves. A harness running
+    many keys in one session must reclaim between them, or the leak
+    makes timings order-dependent (llm_ann_recall_eval measured
+    13.4 s vs 40.5 s by key order alone). Call AFTER the unit's result
+    is fully consumed (e.g. toPandas) — never between building a
     DataFrame and collecting it.
     """
-    for cache in SESSION_FRAME_CACHES:
-        if keep_lazy_metadata and any(cache is c for c in LAZY_METADATA_CACHES):
-            continue
-        cache.clear()
-    sc = spark.sparkContext
+    # Memo entries go first: a checkpointed frame whose blocks are
+    # unpersisted is poison (any reuse fails with
+    # CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND), so no handle may survive.
+    for name, (_, _, lazy) in list(SESSION_MEMO.items()):
+        if not (keep_lazy_metadata and lazy):
+            del SESSION_MEMO[name]
+    # getPersistentRDDs is a live java.util.Map; snapshot before
+    # unpersisting. unpersist(False) is asynchronous: the blocking
+    # default waits for every block-removal ack (~0.2 s per call, ~46 s
+    # over a 232-key sweep), and nothing reuses these blocks.
     released = 0
-    # JavaSparkContext.getPersistentRDDs returns a java.util.Map whose
-    # values are JavaRDDs; py4j exposes it dict-like.  Snapshot before
-    # iterating: unpersist mutates the underlying map.
-    # blocking=False: the JavaRDD overload defaults to a BLOCKING
-    # unpersist (waits for every block-removal ack), measured ~0.2 s
-    # per release_blocks call across a 232-key sweep (~46 s of pure
-    # wait).  Async removal is fine here — the next key never reuses
-    # these blocks (that is the point), and the BlockManager frees
-    # them in the background.
-    jmap = sc._jsc.getPersistentRDDs()
-    for jrdd in list(jmap.values()):
+    for jrdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
         jrdd.unpersist(False)
         released += 1
     spark.catalog.clearCache()
-    # Registered catalog tables are metadata-only by now (external
-    # tables whose files the next line reclaims) — drop them so a warm
-    # many-key session's catalog stays bounded (ADVICE r12).
-    # Best-effort per table (round-13 self-review): a py4j/analysis
-    # failure mid-loop must neither lose the popped name (it goes back
-    # in the registry for the next reclaim) nor abort the rest of this
-    # function — the temp-dir purge below must run regardless.
-    drop_failed: list[str] = []
-    while SESSION_TEMP_TABLES:
-        name = SESSION_TEMP_TABLES.pop()
+    # Best-effort per entry: a failed DROP keeps its name for the next
+    # reclaim and must not stop the temp-dir purge below.
+    failed: list[tuple[str, str]] = []
+    while SESSION_CATALOG_DROPS:
+        kind, name = SESSION_CATALOG_DROPS.pop()
         try:
-            spark.sql(f"DROP TABLE IF EXISTS `{name}`")
+            spark.sql(f"DROP {kind} IF EXISTS `{name}`")
         except Exception:  # noqa: BLE001 — dead JVM; retry next reclaim
-            drop_failed.append(name)
-    SESSION_TEMP_TABLES.extend(drop_failed)
-    # Memory-sink views follow the same discipline: their driver-held
-    # result rows are only reclaimable once the catalog reference is
-    # dropped (round-13 review batch C).
-    view_failed: list[str] = []
-    while SESSION_TEMP_VIEWS:
-        name = SESSION_TEMP_VIEWS.pop()
-        try:
-            spark.catalog.dropTempView(name)
-        except Exception:  # noqa: BLE001 — dead JVM; retry next reclaim
-            view_failed.append(name)
-    SESSION_TEMP_VIEWS.extend(view_failed)
-    # Gate-count memo: cleared on reclaim like the frame caches — the
-    # scalars are cheap to re-derive (one aggregate per gate site per
-    # evaluation, the pre-memo behavior correctness sweeps always had),
-    # and a long-lived session that swaps the data behind an sf_dir
-    # must never broadcast on a stale count (round-13 self-review).
-    # bench.py does not reclaim, so the warm-run saving the memo exists
-    # for is untouched.
-    _GATE_COUNT_MEMO.clear()
-    # Temp roots follow the same lifecycle as checkpoint blocks: the
-    # harness calls release_blocks only after the key's result is fully
-    # consumed, at which point no live plan reads the registered dirs.
-    purge_temp_dirs()
+            failed.append((kind, name))
+    SESSION_CATALOG_DROPS.extend(failed)
+    _purge_temp_dirs()
     return released

@@ -51,10 +51,8 @@ from climateiq_pipelines_spark.registry import load_table
 
 
 def _mk_table(tag: str) -> str:
-    # Registered for post-consumption reclaim (session.purge_temp_dirs
-    # via release_blocks, atexit fallback): each txn key writes ~6 file
-    # groups of orders slices per call — the heaviest /tmp leakers in
-    # the engine before round 12's registry.
+    # Purged by session.release_blocks (atexit fallback): each txn key
+    # writes ~6 file groups of orders slices per call.
     from climateiq_pipelines_spark.session import new_temp_dir
 
     root = new_temp_dir(f"txn_{tag}")

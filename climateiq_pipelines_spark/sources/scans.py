@@ -34,9 +34,9 @@ from climateiq_pipelines_spark.sources.merge_demo import (
 
 
 def _tmpdir(tag: str) -> str:
-    # Registered for post-consumption reclaim (session.purge_temp_dirs
-    # via release_blocks, atexit fallback): the returned frame reads
-    # these files lazily, so the operator itself can never delete them.
+    # Purged by session.release_blocks (atexit fallback): the returned
+    # frame reads these files lazily, so the operator itself can never
+    # delete them.
     from climateiq_pipelines_spark.session import new_temp_dir
 
     return new_temp_dir(tag)

@@ -503,71 +503,68 @@ def test_release_blocks_reclaims_checkpoints(spark):
 
 
 def test_release_blocks_clears_registered_frame_caches(spark):
-    """A module-level cache holding a checkpointed DataFrame is POISON
-    after its blocks are unpersisted (lineage is truncated — reuse dies
-    with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND; hit live by
-    llm_dedup_clusters / graph_label_propagation in the first round-12
-    reclaim sweep).  release_blocks must clear every registered cache
-    so consumers rebuild instead of reusing a dead handle — and the
-    engine's real caches must actually be registered."""
+    """A memoized checkpointed DataFrame is POISON after its blocks are
+    unpersisted (lineage is truncated — reuse dies with
+    CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND).  release_blocks must clear
+    every non-lazy memo entry so consumers rebuild instead of reusing a
+    dead handle — and the engine's frame memos must go through memo."""
     from climateiq_pipelines_spark import session as S
     from climateiq_pipelines_spark.operators import graph_ext2, llm
 
-    assert any(c is graph_ext2._EDGE_CACHE for c in S.SESSION_FRAME_CACHES)
-    assert any(c is graph_ext2._ORIENTED_CACHE for c in S.SESSION_FRAME_CACHES)
-    assert any(c is llm._SIG_CACHE for c in S.SESSION_FRAME_CACHES)
-
-    probe = S.register_frame_cache({})
-    try:
-        ckpt = spark.range(100).localCheckpoint(eager=True)
-        probe["k"] = ckpt
-        S.release_blocks(spark)
-        assert probe == {}, "registered cache must be cleared"
-        # the checkpointed frame itself is now dead by design; a fresh
-        # build works fine
-        assert spark.range(100).count() == 100
-    finally:
-        S.SESSION_FRAME_CACHES.remove(probe)
+    S.release_blocks(spark)
+    docs = spark.createDataFrame(
+        [(1, "a b c"), (2, "a b d")], "doc_id long, text string")
+    llm._simhash60_sigs(docs)
+    graph_ext2._copurchase_edges(spark, SF_SMALL)
+    S.memo(spark, "probe_frame", "k",
+           lambda: spark.range(100).localCheckpoint(eager=True))
+    assert {"simhash60_sigs", "copurchase_edges", "probe_frame"} <= set(
+        S.SESSION_MEMO)
+    S.release_blocks(spark)
+    assert S.SESSION_MEMO == {}, "every frame memo entry must be cleared"
+    # the entry rebuilds on next use
+    again = S.memo(spark, "probe_frame", "k", lambda: spark.range(5))
+    assert again.count() == 5
+    S.release_blocks(spark)
 
 
 def test_release_blocks_purges_registered_temp_dirs(spark):
-    """Round-12 code review: scan/sink/txn operators mkdtemp fixture
-    slices their returned frame reads lazily, so the operator can never
-    delete its own directory — without reclaim every sweep leaks full
-    parquet copies into /tmp for the life of the host.  Registered
-    roots must be purged by release_blocks (post-consumption, same
-    lifecycle as checkpoint blocks) and the registry must drain."""
+    """Scan/sink/txn operators stage files their returned frame reads
+    lazily, so the operator can never delete its own directory.
+    new_temp_dir roots must be purged by release_blocks (post-
+    consumption, same lifecycle as checkpoint blocks), the registry
+    must drain, and a memo entry naming the dir goes in the same call."""
     import os
-    import tempfile
 
     from climateiq_pipelines_spark import session as S
 
-    d = S.register_temp_dir(tempfile.mkdtemp(prefix="cps_purge_probe_"))
+    d = S.memo(spark, "probe_dir", "sf", lambda: S.new_temp_dir("purge_probe"))
     open(os.path.join(d, "f.bin"), "wb").write(b"x")
     assert d in S.SESSION_TEMP_DIRS
-    S.release_blocks(spark)
+    S.release_blocks(spark, keep_lazy_metadata=True)
     assert not os.path.exists(d)
     assert d not in S.SESSION_TEMP_DIRS
+    assert "probe_dir" not in S.SESSION_MEMO
     # idempotent on an empty registry
-    assert S.purge_temp_dirs() == 0
+    S.release_blocks(spark)
+    assert S.SESSION_TEMP_DIRS == []
 
 
 def test_every_module_level_cache_is_reclaim_safe():
-    """Static sweep of the WHOLE package (ADVICE r12 widened the r12
-    original): every module-level EMPTY-dict assignment — the cache
-    pattern; non-empty dict literals are constant tables — is
-    classified by its annotation and held to the reclaim discipline:
+    """Static sweep of the WHOLE package: what a session keeps lives in
+    session.py, whose release_blocks frees it.  Outside session.py:
 
-    - DataFrame-valued  -> must be wrapped in register_frame_cache at
-      the assignment site (the round-12 poison-handle class:
-      CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND after harness reclaim);
-    - str-valued *CACHE -> a PATH cache of temp-backed data; its module
-      must re-validate os.path.isdir before reuse (stateful_timeout's
-      _SPLIT_CACHE pattern — a purged dir must rebuild, not be read);
-    - UNANNOTATED       -> fails outright: an unclassifiable cache is
-      exactly how the next temp-backed frame or path cache would slip
-      past this guard (the ADVICE r12 gap);
-    - int/bool/other value memos -> fine (no filesystem/block state).
+    - no module-level assignment typed with DataFrame (a frame memo
+      outside the reclaim is the poison-handle class:
+      CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND after reclaim);
+    - no str-valued *CACHE/*MEMO dict (a path cache into a purgeable
+      temp dir; str-valued registries such as ORACLES are constant
+      tables);
+    - every module-level EMPTY-dict assignment — the cache pattern;
+      non-empty dict literals are constant tables — carries a
+      parameterized annotation so this guard can classify it
+      (int/bool/other value memos are fine: no filesystem/block state);
+    - no code reads ``applicationId`` (session keying is memo's job).
     """
     import ast
     import pathlib
@@ -576,28 +573,20 @@ def test_every_module_level_cache_is_reclaim_safe():
         "climateiq_pipelines_spark")
     offenders = []
     for path in sorted(pkg.rglob("*.py")):
-        src = path.read_text()
-        tree = ast.parse(src, filename=str(path))
+        if path.name == "session.py" and path.parent == pkg:
+            continue
+        tree = ast.parse(path.read_text(), filename=str(path))
+        offenders += [
+            f"{path.name}:{n.lineno} — reads applicationId"
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Attribute) and n.attr == "applicationId"
+        ]
         for node in tree.body:  # module level only
             if not isinstance(node, (ast.Assign, ast.AnnAssign)):
                 continue
             val = node.value
             if val is None:
                 continue
-            wrapped = (
-                isinstance(val, ast.Call)
-                and ast.unparse(val.func).endswith("register_frame_cache")
-                and val.args
-            )
-            inner = val.args[0] if wrapped else val
-            is_empty_dict = (
-                isinstance(inner, ast.Dict) and not inner.keys
-            ) or (
-                isinstance(inner, ast.Call)
-                and ast.unparse(inner.func) in ("dict", "defaultdict")
-                and not inner.args
-                and not inner.keywords
-            )
             tgt = (
                 node.target
                 if isinstance(node, ast.AnnAssign)
@@ -609,18 +598,20 @@ def test_every_module_level_cache_is_reclaim_safe():
                 if isinstance(node, ast.AnnAssign)
                 else None
             )
-            # The ORIGINAL r12 rule, kept in full (round-13 self-review:
-            # the widened sweep must not NARROW it): ANY module-level
-            # annotated assignment whose annotation mentions DataFrame
-            # must be register_frame_cache-wrapped — this covers caches
-            # initialized from helper calls / defaultdict / non-empty
-            # literals, not just empty dicts.
-            if ann is not None and "DataFrame" in ann and not wrapped:
+            if ann is not None and "DataFrame" in ann:
                 offenders.append(
                     f"{path.name}: {name} — DataFrame-typed module "
-                    "assignment missing register_frame_cache"
+                    "state outside session.py"
                 )
                 continue
+            is_empty_dict = (
+                isinstance(val, ast.Dict) and not val.keys
+            ) or (
+                isinstance(val, ast.Call)
+                and ast.unparse(val.func) in ("dict", "defaultdict")
+                and not val.args
+                and not val.keywords
+            )
             if not is_empty_dict:
                 continue
             if ann is None:
@@ -639,66 +630,107 @@ def test_every_module_level_cache_is_reclaim_safe():
                     "parameterize the value type so this guard can "
                     "classify it"
                 )
-            elif value_t == "str" and "CACHE" in name.upper():
-                if "os.path.isdir" not in src:
-                    offenders.append(
-                        f"{path.name}: {name} — path cache without an "
-                        "os.path.isdir re-validation (purged temp dirs "
-                        "would be read after the first reclaim)"
-                    )
+            elif value_t == "str" and any(
+                    w in name.upper() for w in ("CACHE", "MEMO")):
+                offenders.append(
+                    f"{path.name}: {name} — str-valued module cache "
+                    "outside session.py (a path into a purged temp dir "
+                    "would be read after the first reclaim)"
+                )
     assert not offenders, "reclaim-unsafe module caches: " + "; ".join(
         offenders)
 
 
-def test_release_blocks_drops_registered_temp_views(spark):
-    """Round-13 review batch C: the streaming demo keys' memory sinks
-    live behind temp views holding their full result rows in driver
-    memory — a warm many-key session accumulated 4 undropped views per
-    sweep.  register_temp_view entries must be dropped by
-    release_blocks and the registry must drain."""
+def test_release_blocks_drops_registered_temp_views(spark, tmp_path):
+    """Memory sinks live behind temp views holding their full result
+    rows in driver memory.  register_temp_view entries — a plain temp
+    view and an availableNow memory-sink view alike — must be dropped
+    by release_blocks and the drop list must drain."""
     from climateiq_pipelines_spark import session as S
 
     name = S.register_temp_view("cps_viewdrop_probe")
     spark.range(3).createOrReplaceTempView(name)
-    assert spark.catalog.tableExists(name)
+    src = str(tmp_path / "src")
+    spark.range(4).write.parquet(src)
+    sink = S.register_temp_view("cps_viewdrop_sink_probe")
+    q = (
+        spark.readStream.schema("id long").parquet(src)
+        .writeStream.format("memory").queryName(sink)
+        .trigger(availableNow=True).start()
+    )
+    q.awaitTermination()
+    assert spark.table(sink).count() == 4
     S.release_blocks(spark)
     assert not spark.catalog.tableExists(name)
-    assert name not in S.SESSION_TEMP_VIEWS
+    assert not spark.catalog.tableExists(sink)
+    assert S.SESSION_CATALOG_DROPS == []
 
 
 def test_gate_count_memoizes_per_session_and_sfdir(spark):
-    """VERDICT r12 #4: the measured-payload broadcast gates cost one
-    count() action per evaluation; the scalar is deterministic per
-    (session, sf_dir), so repeated evaluations must skip the probe —
-    and the memo key must distinguish sf_dir and site."""
+    """The measured-payload broadcast gates cost one count() action per
+    evaluation; the scalar is deterministic per (session, sf_dir), so
+    repeated evaluations must skip the probe — memo(spark, "gate:site",
+    sf_dir, df.count) — and the key must distinguish sf_dir and site."""
     from climateiq_pipelines_spark import session as S
 
-    assert S.gate_count(spark.range(7), spark, "/x", "probe_site") == 7
+    def boom():
+        raise AssertionError("gate probe re-ran on a memoized key")
 
-    class _Boom:
-        def count(self):
-            raise AssertionError("gate probe re-ran on a memoized key")
-
-    assert S.gate_count(_Boom(), spark, "/x", "probe_site") == 7
-    assert S.gate_count(spark.range(3), spark, "/y", "probe_site") == 3
-    assert S.gate_count(spark.range(2), spark, "/x", "other_site") == 2
+    assert S.memo(spark, "gate:probe_site", "/x", spark.range(7).count) == 7
+    assert S.memo(spark, "gate:probe_site", "/x", boom) == 7
+    assert S.memo(spark, "gate:other_site", "/x", spark.range(2).count) == 2
+    assert S.memo(spark, "gate:probe_site", "/y", spark.range(3).count) == 3
+    assert S.memo(spark, "gate:other_site", "/x", boom) == 2
+    S.release_blocks(spark)
+    assert S.memo(spark, "gate:other_site", "/x", spark.range(4).count) == 4
+    S.release_blocks(spark)
 
 
 def test_release_blocks_drops_registered_catalog_tables(spark):
-    """ADVICE r12: join_bucketed_colocated's per-invocation saveAsTable
-    entries outlived their (purged) backing files, so warm sessions
-    accumulated unbounded metastore rows.  register_temp_table entries
-    must be DROPPED by release_blocks and the registry must drain."""
+    """Per-invocation saveAsTable entries must not outlive their
+    (purged) backing files, or a warm session accumulates unbounded
+    metastore rows.  register_temp_table entries must be DROPPED by
+    release_blocks and the drop list must drain."""
     from climateiq_pipelines_spark import session as S
 
     name = "cps_droptest_probe"
     spark.range(3).write.mode("overwrite").saveAsTable(
         S.register_temp_table(name))
     assert spark.catalog.tableExists(name)
-    assert name in S.SESSION_TEMP_TABLES
+    assert ("TABLE", name) in S.SESSION_CATALOG_DROPS
     S.release_blocks(spark)
     assert not spark.catalog.tableExists(name)
-    assert name not in S.SESSION_TEMP_TABLES
+    assert S.SESSION_CATALOG_DROPS == []
+
+
+def test_release_blocks_failed_drop_keeps_name_and_still_purges(
+        spark, monkeypatch):
+    """A DROP that raises (e.g. a dead JVM) must leave its entry on the
+    drop list for the next reclaim, must not stop the other drops, and
+    the temp-dir purge must still run."""
+    import os
+
+    from climateiq_pipelines_spark import session as S
+
+    real_sql = spark.sql
+
+    def flaky_sql(stmt, *args, **kwargs):
+        if "cps_dropfail_probe" in stmt:
+            raise RuntimeError("simulated DROP failure")
+        return real_sql(stmt, *args, **kwargs)
+
+    S.register_temp_view("cps_dropfail_probe")
+    ok = S.register_temp_view("cps_dropok_probe")
+    spark.range(1).createOrReplaceTempView(ok)
+    d = S.new_temp_dir("dropfail_probe")
+    monkeypatch.setattr(spark, "sql", flaky_sql)
+    S.release_blocks(spark)
+    assert S.SESSION_CATALOG_DROPS == [("VIEW", "cps_dropfail_probe")]
+    assert not spark.catalog.tableExists(ok)
+    assert not os.path.exists(d) and S.SESSION_TEMP_DIRS == []
+    monkeypatch.setattr(spark, "sql", real_sql)
+    S.release_blocks(spark)
+    assert S.SESSION_CATALOG_DROPS == []
 
 
 def test_registered_builders_carry_docstrings():
@@ -789,6 +821,20 @@ def test_bench_gated_summary_scan_skips_non_dict_json():
     # newest summary wins when two exist (a rerun appends)
     newer = '{"value": 59.0}'
     assert bg.extract_summary(real + "\n" + newer)["value"] == 59.0
+    # bench.py's stdout: one {"query","sec"} dict per key, then the
+    # suite line — only the suite line carries "value"
+    bench_out = "\n".join([
+        '{"query": "agg_pricing_summary", "sec": 0.4123}',
+        '{"query": "join_multikey", "sec": 0.2871}',
+        '{"metric": "suite_wall_sec", "value": 0.6994, "unit": "sec",'
+        ' "n_queries": 2, "sf": 0.1, "load_1m_before": 0.1,'
+        ' "load_1m_after": 0.2}',
+    ])
+    got = bg.extract_summary(bench_out)
+    assert got["metric"] == "suite_wall_sec" and got["value"] == 0.6994
+    # a run cut before its suite line has no summary, even though its
+    # per-key lines are dicts
+    assert bg.extract_summary(bench_out.rsplit("\n", 1)[0]) is None
 
 
 def test_bench_reclaim_flag_accepts_only_0_or_1(monkeypatch):
@@ -1160,15 +1206,43 @@ def test_widen_if_narrow_semantics(spark):
     assert widen_if_narrow(spark, wide) is wide
 
 
-def test_graph_cache_evicts_to_latest_entry():
-    """ADVICE r8: the graph edge/orientation memo caches must not pin
-    checkpointed frames for every sf_dir ever swept — _cache_put keeps
-    only the latest (application, sf_dir) entry."""
-    from climateiq_pipelines_spark.operators.graph_ext2 import _cache_put
+def test_graph_cache_evicts_to_latest_entry(spark):
+    """Memo entries must not pin checkpointed frames for every sf_dir
+    ever swept: each name keeps only its latest (application, key)
+    entry, for frame and lazy entries alike, and only the lazy one
+    survives release_blocks(keep_lazy_metadata=True)."""
+    from climateiq_pipelines_spark import session as S
 
-    cache = {}
-    _cache_put(cache, ("app", "sf_a"), "frame_a")
-    _cache_put(cache, ("app", "sf_a"), "frame_a2")  # same key: replace
-    assert cache == {("app", "sf_a"): "frame_a2"}
-    _cache_put(cache, ("app", "sf_b"), "frame_b")  # new key: evict old
-    assert cache == {("app", "sf_b"): "frame_b"}
+    app = spark.sparkContext.applicationId
+    frame_a = spark.range(3).localCheckpoint()
+    frame_b = spark.range(4).localCheckpoint()
+    for name, lazy in (("probe_frame", False), ("probe_lazy", True)):
+        assert S.memo(spark, name, "sf_a", lambda: frame_a, lazy=lazy) is frame_a
+        # same key: hit, the build is not called
+        assert S.memo(spark, name, "sf_a", lambda: frame_b, lazy=lazy) is frame_a
+        # new key: the old entry is evicted
+        assert S.memo(spark, name, "sf_b", lambda: frame_b, lazy=lazy) is frame_b
+        assert S.SESSION_MEMO[name] == ((app, "sf_b"), frame_b, lazy)
+        assert S.memo(spark, name, "sf_a", lambda: frame_b, lazy=lazy) is frame_b
+    S.release_blocks(spark, keep_lazy_metadata=True)
+    assert "probe_frame" not in S.SESSION_MEMO
+    assert "probe_lazy" in S.SESSION_MEMO
+    S.release_blocks(spark)
+    assert "probe_lazy" not in S.SESSION_MEMO
+
+
+def test_simhash_sigs_keep_one_live_entry(spark):
+    """Signature frames follow the one-live-key rule: a second document
+    frame evicts the first's checkpointed signatures, so a session that
+    never reclaims holds one signature frame, not one per input plan."""
+    from climateiq_pipelines_spark.operators.llm import _simhash60_sigs
+
+    schema = "doc_id long, text string"
+    docs_a = spark.createDataFrame([(1, "a b c"), (2, "a b d")], schema)
+    docs_b = spark.createDataFrame([(3, "x y z")], schema)
+    sig_a = _simhash60_sigs(docs_a)
+    assert _simhash60_sigs(docs_a) is sig_a
+    sig_b = _simhash60_sigs(docs_b)
+    assert _simhash60_sigs(docs_b) is sig_b
+    # docs_a's entry was evicted by docs_b: a new frame is built
+    assert _simhash60_sigs(docs_a) is not sig_a
